@@ -30,8 +30,12 @@ def entry(spark: SparkSession) -> DataFrame:
 _EXPOSURE_PRIORITY = [
     # ---- ROUND 18 WINDOW (50 slots exactly) --------------------------
     # Block A (24): every query whose EXECUTED PLAN changed in the r18
-    # optimization round, each locally oracle-verified at sf0.001 AND
-    # sf0.01 through this contract at the point of change:
+    # optimization round at bench scale, each locally oracle-verified
+    # at sf0.001 AND sf0.01 through this contract at the point of
+    # change. events_stream_file_sink is not listed: it also moved to
+    # the derived state-partition count (queries/events.py), and its
+    # plan is unchanged only at bench scale, where that count equals
+    # the old constant 8. The block:
     # - the six memory-sink streaming heads (drain pinned
     #   executor-side instead of the collect + createDataFrame Python
     #   round-trip);
@@ -103,85 +107,6 @@ _EXPOSURE_PRIORITY = [
     "skew_replicated_join",
 ]
 
-_EXPOSURE_R17 = [
-    # ---- ROUND 17 WINDOW (kept for the audit trail) ------------------
-    # Block A (3): this round's most plan-changed queries not already
-    # inside the r13 refill below, ranked by (change magnitude,
-    # staleness). hierarchical_cells_assign (r14 row) and
-    # ivf_multiprobe_twolevel (r15) had their executed plans REPLACED
-    # by the staged one-pass split reads; embedding_drift_monitor
-    # (r15) was rewritten to the conditional-pivot aggregation while
-    # recovering its r16 floor drift. The remaining r17 plan changes
-    # — dsir_importance_weights' fused aggregation (r16 row),
-    # repetition_quality's chunked fan-out (r14), the chunk_bytes cap
-    # on ten more text heads, the staged-fixture REBALANCE layout,
-    # the staged dHash index, the multi-file stream epochs, and the
-    # coda's fanned staged vector-model reads (PERF.md round-17
-    # coda; 22 consumer plans) — sit on queries that are either
-    # inside the r13 block below (orders_stream_checksum,
-    # image_dhash_neardup, bpe_doc_tokenize, pq_adc_topk,
-    # embedding_neardup, neardup_clusters, cluster_survivor_selection)
-    # or carry recent rows and were locally oracle-verified
-    # post-change at BOTH sweep scales (the closing 192/192 sweeps
-    # re-ran AFTER the coda landed).
-    "hierarchical_cells_assign",
-    "ivf_multiprobe_twolevel",
-    "embedding_drift_monitor",
-    # Block B (47): the complete r13 block — every query whose
-    # latest driver row is round 13, exactly as the r16 rotation
-    # note promised. After this round no query's latest driver row
-    # predates r14.
-    "alias_resolution_join",
-    "ann_cosine_topk",
-    "ann_verify",
-    "asof_join_clicks_views",
-    "bigram_surprisal_filter",
-    "bpe_doc_tokenize",
-    "bpe_fertility_by_lang",
-    "bucket_checksum_diff",
-    "cdc_fuzzy_chunk_match",
-    "cdc_incremental_dedup",
-    "census_header_schema",
-    "classifier_trailing_char",
-    "cluster_survivor_selection",
-    "corpus_curation_filter",
-    "corrupt_record_quarantine",
-    "cube_returnflag_status",
-    "curriculum_packing",
-    "dedup_full_row",
-    "dim_upsert_if_absent",
-    "dpp_runtime_pruned_join",
-    "eav_long_table",
-    "embedding_int8_recall",
-    "embedding_neardup",
-    "embedding_neardup_verify",
-    "events_json_props",
-    "events_session_windows",
-    "events_sliding_windows",
-    "except_order_keys",
-    "histogram_quantile_rollup",
-    "image_dhash_neardup",
-    "incremental_minhash_dedup",
-    "intersect_nation_keys",
-    "ivf_index_quality",
-    "locality_hierarchy_paths",
-    "media_strict_decode",
-    "mode_part_brand",
-    "nations_per_region",
-    "neardup_clusters",
-    "orders_stream_checksum",
-    "pivot_status_by_flag",
-    "pq_adc_topk",
-    "priority_sample_topk",
-    "range_join_ship_window",
-    "rollup_order_priority",
-    "semantic_decontam",
-    "temperature_mix_weights",
-    "union_distinct_keys",
-    # everything below position 50 was driver-green in rounds 14-16
-    # with code either unchanged this round or locally
-    # oracle-verified post-change; deferred past the sample window
-]
 
 def _ordered_registry():
     from gerrydb_etl_spark.queries import REGISTRY

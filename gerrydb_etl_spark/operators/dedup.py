@@ -453,11 +453,21 @@ def minhash_probe_pairs(
 
     ``existing_banded`` / ``incoming_banded``: optionally the
     PRE-BANDED (doc, sig, band, key) rows for a side (the staged
-    index, store/staging.py ensure_staged_minhash_bands), skipping
+    index, store/staging.py MINHASH_INDEX), skipping
     that side's signature build. Signatures aggregate per doc, so a
     doc-filter of the staged full-corpus table is exactly the
-    banding of the same-filtered shingle rows.
+    banding of the same-filtered shingle rows. A side with neither
+    raw rows nor pre-banded rows raises ``ValueError`` naming it.
     """
+    for side, raw, banded in (
+        ("existing", existing, existing_banded),
+        ("incoming", incoming, incoming_banded),
+    ):
+        if raw is None and banded is None:
+            raise ValueError(
+                f"minhash_probe_pairs: the {side} side has neither shingle "
+                f"rows ({side}=None) nor pre-banded rows ({side}_banded=None)"
+            )
     ex = (
         existing_banded
         if existing_banded is not None
@@ -526,7 +536,7 @@ def minhash_lsh_pairs(
     unaffected at any sane cap.
 
     ``banded``: optionally the PRE-BANDED (doc, sig, band, key) rows
-    (the staged index, store/staging.py ensure_staged_minhash_bands),
+    (the staged index, store/staging.py MINHASH_INDEX),
     skipping the per-query signature build entirely.
     """
     if banded is None:

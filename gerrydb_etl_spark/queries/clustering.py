@@ -16,9 +16,17 @@ from pyspark.sql import functions as F
 from gerrydb_etl_spark.operators.kmeans import kmeans_train, semantic_dedup
 from gerrydb_etl_spark.queries.base import query
 from gerrydb_etl_spark.sources import load_table
+from gerrydb_etl_spark.store.staging import (
+    CELL_SPLIT,
+    IVF,
+    KMEANS,
+    corpus_count,
+    register,
+)
 
 K = 8
 ITERS = 3
+_KMEANS = register("kmeans_k8", KMEANS.at(k=K, iters=ITERS))
 TAU = 0.4
 
 # sequential left fold of squared differences in DOUBLE — the same
@@ -132,7 +140,6 @@ def semantic_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
         needs_cell_split,
         split_oversized_cells,
     )
-    from gerrydb_etl_spark.store.staging import corpus_count, staged_kmeans
 
     emb = load_table(spark, sf_dir, "embeddings")
     # corpus-scaled k (see cells_for_corpus): == K at every
@@ -143,7 +150,7 @@ def semantic_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sweep's biggest finding)
     n = corpus_count(spark, sf_dir, "embeddings")
     k_dyn = cells_for_corpus(n, floor_k=K)
-    assigned = staged_kmeans(spark, sf_dir, k=k_dyn, iters=ITERS)
+    assigned = KMEANS.read(spark, sf_dir, k=k_dyn, iters=ITERS)
     if needs_cell_split(n):
         # past cap * per_cell (~128k) vectors k stops scaling and
         # occupancy grows again — refine the capped cells with the
@@ -204,6 +211,23 @@ def _forced_per_cell(n: int, floor: int) -> int:
             "raise the floor) together with the fixture"
         )
     return per_cell
+
+
+def _scaled_per_cell(floor: int):
+    """``_forced_per_cell`` as a fixture param, evaluated at ensure time."""
+    return lambda spark, sf_dir: _forced_per_cell(
+        corpus_count(spark, sf_dir, "embeddings"), floor
+    )
+
+
+# the k=4 top level of the forced-split queries, as k-means and as an
+# IVF model (probe ranking needs its centroids), and the one-pass
+# split of each
+_K4 = register("kmeans_k4", KMEANS.at(k=_HK, iters=_HITERS))
+_IVF4 = register("ivf_c4", IVF.at(n_cells=_HK, iters=_HITERS))
+_K4_SPLIT = register("split_kmeans_k4", CELL_SPLIT.at(
+    base=_K4, per_cell=_scaled_per_cell(_HPER), iters=2,
+))
 
 _HSQD = """list_reduce(list_prepend(0.0::DOUBLE,
               list_transform(list_zip(r.qv, c.cv),
@@ -299,28 +323,16 @@ def hierarchical_cells_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     Lloyd — replays step-for-step in the DuckDB oracle, pinning the
     exact arithmetic the past-the-cap production path
     (needs_cell_split in semantic dedup / IVF) relies on."""
-    from gerrydb_etl_spark.store.staging import (
-        corpus_count,
-        ensure_staged_kmeans,
-        staged_split,
-    )
-
-    # the k=4 top-level model is session-staged like every other
-    # trained quantizer (fixed-point training — staged values are
-    # identical to inline, the re-training replay oracle unaffected)
-    base_name = ensure_staged_kmeans(spark, sf_dir, k=_HK, iters=_HITERS)
-    assigned = spark.table(base_name).select(
-        "vec_id", "cluster_id", "qv"
-    )
-    # corpus-scaled per_cell, floor == the oracle literal at every
-    # driver-verified scale (the cells_for_corpus pattern; coupling
-    # enforced by _forced_per_cell): with per_cell FROZEN under a
-    # fixed k=4 the second-level join volume is sum(n_c * m_c) ~
-    # n^2 / (k * per_cell) — quadratic in the corpus (measured 3.3s
-    # -> 48.4s at the natural 10x). Scaling per_cell with n keeps
-    # subcell counts, and the join, linear.
-    n = corpus_count(spark, sf_dir, "embeddings")
-    per_cell = _forced_per_cell(n, _HPER)
+    # The k=4 top-level model and its split are session-staged like
+    # every other trained quantizer (fixed-point training — staged
+    # values are identical to inline, the re-training replay oracle
+    # unaffected). per_cell is corpus-scaled, floor == the oracle
+    # literal at every oracle-verified scale (the cells_for_corpus
+    # pattern; coupling enforced by _forced_per_cell): with per_cell
+    # FROZEN under a fixed k=4 the second-level join volume is
+    # sum(n_c * m_c) ~ n^2 / (k * per_cell) — quadratic in the corpus
+    # (measured 3.3s -> 48.4s at the natural 10x). Scaling per_cell
+    # with n keeps subcell counts, and the join, linear.
     # max_levels=1 pins the ONE-level contract this query's oracle
     # replays: the SQL replay is exactly one strided-seed Lloyd pass,
     # so the recursive default (which would re-split any still-
@@ -334,9 +346,7 @@ def hierarchical_cells_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     # query and ivf_multiprobe_twolevel each re-trained it inline
     # per call; values identical (fixed-point), oracle replays the
     # full training unchanged.
-    split, _ = staged_split(
-        spark, base_name, assigned, per_cell=per_cell, iters=2
-    )
+    split, _ = _K4_SPLIT.read(spark, sf_dir)
     return split.select("vec_id", "cluster_id", "sub_id")
 
 
@@ -359,6 +369,9 @@ DVNORM_SQL = """sqrt(list_reduce(list_prepend(0.0::DOUBLE,
 # assignment, secondary probes ranked via the subcentroid join)
 # executes at driver scale under a full value-hash oracle
 _TLPER = 25
+_IVF4_SPLIT = register("split_ivf_c4", CELL_SPLIT.at(
+    base=_IVF4, per_cell=_scaled_per_cell(_TLPER), iters=2,
+))
 _TL_TAU = 0.35
 _TL_PROBES = 2
 
@@ -440,29 +453,18 @@ def ivf_multiprobe_twolevel(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays training -> split -> home/secondary block derivation ->
     refined-block pairing -> rescore -> DISTINCT end to end."""
     from gerrydb_etl_spark.operators.kmeans import multiprobe_pairs
-    from gerrydb_etl_spark.store.staging import (
-        corpus_count,
-        ensure_staged_ivf,
-        staged_ivf,
-        staged_split,
-    )
 
     emb = load_table(spark, sf_dir, "embeddings")
     # the k=4 model is staged with its centroid side: probe ranking
     # needs the ORIGINAL centroids, not derivable from the assignment
-    assigned, cents = staged_ivf(spark, sf_dir, _HK, _HITERS)
-    n = corpus_count(spark, sf_dir, "embeddings")
-    # floor == the oracle literal at every oracle-verified scale;
-    # _forced_per_cell fails loudly if a fixture regen breaks that
-    per_cell = _forced_per_cell(n, _TLPER)
+    assigned, cents = _IVF4.read(spark, sf_dir)
     # the one-pass split is session-staged (r17, same write-once
     # index economics as the k=4 model — see
     # hierarchical_cells_assign); values identical to inline
-    # training, the full-replay oracle unchanged
-    base_name, _cname = ensure_staged_ivf(spark, sf_dir, _HK, _HITERS)
-    sub_model = staged_split(
-        spark, base_name, assigned, per_cell=per_cell, iters=2
-    )
+    # training, the full-replay oracle unchanged. Its per_cell floor
+    # == the oracle literal at every oracle-verified scale;
+    # _forced_per_cell fails loudly if a fixture regen breaks that
+    sub_model = _IVF4_SPLIT.read(spark, sf_dir)
     return multiprobe_pairs(
         emb, tau=_TL_TAU, centroids=cents, probes=_TL_PROBES,
         sub_model=sub_model,
@@ -526,12 +528,11 @@ def ivf_blocked_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         needs_cell_split,
         split_oversized_cells,
     )
-    from gerrydb_etl_spark.store.staging import corpus_count, staged_kmeans
 
     emb = load_table(spark, sf_dir, "embeddings")
     n = corpus_count(spark, sf_dir, "embeddings")
     k_dyn = cells_for_corpus(n, floor_k=K)
-    assigned = staged_kmeans(spark, sf_dir, k=k_dyn, iters=ITERS)
+    assigned = KMEANS.read(spark, sf_dir, k=k_dyn, iters=ITERS)
     if needs_cell_split(n):
         # never active at any driver-verified scale (oracle untouched)
         assigned, _ = split_oversized_cells(assigned)
@@ -607,12 +608,11 @@ def ivf_blocked_neardup_strict(spark: SparkSession, sf_dir: str) -> DataFrame:
         needs_cell_split,
         split_oversized_cells,
     )
-    from gerrydb_etl_spark.store.staging import corpus_count, staged_kmeans
 
     emb = load_table(spark, sf_dir, "embeddings")
     n = corpus_count(spark, sf_dir, "embeddings")
     k_dyn = cells_for_corpus(n, floor_k=K)
-    assigned = staged_kmeans(spark, sf_dir, k=k_dyn, iters=ITERS)
+    assigned = KMEANS.read(spark, sf_dir, k=k_dyn, iters=ITERS)
     if needs_cell_split(n):
         # never active at any driver-verified scale (oracle untouched)
         assigned, _ = split_oversized_cells(assigned)
@@ -682,9 +682,7 @@ def embedding_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     and a drifting cell triggers the expensive re-clustering, not
     the other way round. Oracle: full training replay
     (_kmeans_ctes) + the same integer arithmetic."""
-    from gerrydb_etl_spark.store.staging import staged_kmeans
-
-    asn = staged_kmeans(spark, sf_dir, K, ITERS).select(
+    asn = _KMEANS.read(spark, sf_dir).select(
         "vec_id", "cluster_id", (F.col("vec_id") % 2).alias("half"), "qv"
     )
     # One conditional pivot per (cell, dim) instead of the even/odd

@@ -33,9 +33,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gerrydb_etl_spark.functions.text import tokenize
-from gerrydb_etl_spark.store.staging import staged_shingles
 from gerrydb_etl_spark.queries.base import query
 from gerrydb_etl_spark.sources.registry import load_table
+from gerrydb_etl_spark.store.staging import SHINGLES, register
 
 # Spark regexp_* compiles Java regex; DuckDB compiles RE2. Both
 # patterns below stay inside the common subset (character classes,
@@ -48,6 +48,8 @@ PHONE_RE = "[0-9]{3}-[0-9]{4}"
 # the held-out eval set for decontamination (the corpus ships no
 # separate benchmark table; 1/97 of docs ≈ an eval suite's size).
 BENCH_MOD = 97
+# the 5-shingles the decontamination probe matches on
+_SHINGLES5 = register("shingles_n5", SHINGLES.at(n=5))
 
 PACK_BUDGET = 2048
 
@@ -88,7 +90,7 @@ def benchmark_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle join on shingle; the residue-class spelling here keeps
     the demonstration inside one corpus.
     """
-    sh = staged_shingles(spark, sf_dir, 5)
+    sh = _SHINGLES5.read(spark, sf_dir)
     bench = (
         sh.filter(F.col("doc") % BENCH_MOD == 0).select("shingle").distinct()
     )

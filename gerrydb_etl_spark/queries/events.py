@@ -12,7 +12,8 @@ from pyspark.sql import functions as F
 
 from gerrydb_etl_spark.queries.base import query
 from gerrydb_etl_spark.sources import load_table
-from gerrydb_etl_spark.streaming.stream import scaled_state_partitions
+from gerrydb_etl_spark.store.staging import register
+from gerrydb_etl_spark.streaming.stream import EPOCH_DIR, scaled_state_partitions
 from gerrydb_etl_spark.streaming.windows import json_props, session, sliding, tumbling
 
 
@@ -464,6 +465,12 @@ def events_stream_store_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(root, ignore_errors=True)
 
 
+# the ingest head's epoch input: documents in 2 ascending doc_id epochs
+_DOCS_EPOCHS = register("docs_epochs", EPOCH_DIR.at(
+    table="documents", key_col="doc_id", prefix="docs", n_batches=2, files_per_batch=1,
+))
+
+
 @query(
     "docs_stream_dedup_ingest",
     oracle="""
@@ -504,8 +511,6 @@ def docs_stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gerrydb_etl_spark.store.wap import VersionedTable
     from gerrydb_etl_spark.streaming.stream import run_docs_dedup_ingest
 
-    from gerrydb_etl_spark.streaming.stream import ensure_staged_epoch_dir
-
     root = tempfile.mkdtemp(prefix="docs_dedup_store_")
     try:
         run_docs_dedup_ingest(
@@ -513,10 +518,7 @@ def docs_stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             # session-staged epoch input (r18): the per-call staging
             # writes were ~0.5s of harness cost inside the timed
             # query (.scale/opt_r18_epochstage_share.json)
-            stage_dir=ensure_staged_epoch_dir(
-                spark, sf_dir, "documents", "doc_id", "docs", 2,
-                files_per_batch=1,
-            ),
+            stage_dir=_DOCS_EPOCHS.ensure(spark, sf_dir),
         )
         table = VersionedTable(spark, root)
         out = table.read().select("doc_id", "content_sha")

@@ -17,6 +17,7 @@ from gerrydb_etl_spark.operators.pagerank import SCALE, pagerank_fixed_point
 from gerrydb_etl_spark.operators.triangles import triangle_counts
 from gerrydb_etl_spark.queries.base import query
 from gerrydb_etl_spark.sources import load_table
+from gerrydb_etl_spark.store.staging import COPURCHASE, register
 
 ITERATIONS = 3
 
@@ -103,6 +104,7 @@ def pagerank_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 MIN_SUPPORT = 2
+_COPURCHASE = register("copurchase_pairs", COPURCHASE.at(min_support=MIN_SUPPORT))
 
 
 @query(
@@ -160,15 +162,13 @@ _EDGES_CTE = f"""
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Support-filtered co-purchase edges (u < v), read from the
     session-staged co-occurrence index
-    (store/staging.ensure_staged_copurchase — the basket explosion +
+    (store/staging.py COPURCHASE — the basket explosion +
     support aggregation staged once per corpus version, the same
     write-once economics as the shingle inverted index; r17).
     Values identical to the inline derivation by construction (the
     staging writer IS operators/triangles.copurchase_pair_supports),
     so the basket-replay oracles are unchanged."""
-    from gerrydb_etl_spark.store.staging import staged_copurchase
-
-    return staged_copurchase(spark, sf_dir, MIN_SUPPORT).select("u", "v")
+    return _COPURCHASE.read(spark, sf_dir).select("u", "v")
 
 
 @query(
@@ -281,8 +281,6 @@ def association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rule set — and therefore every join here — sparse at 100 TB;
     it is applied BEFORE any per-item join, so no unfiltered pair
     ever shuffles twice."""
-    from gerrydb_etl_spark.store.staging import staged_copurchase
-
     li = (
         load_table(spark, sf_dir, "lineitem")
         .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
@@ -297,7 +295,7 @@ def association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the basket count — both one map-side-combined aggregation, no
     # basket build, no persist lifecycle.
     n_orders = li.select("ok").distinct().count()
-    pair = staged_copurchase(spark, sf_dir, MIN_SUPPORT)
+    pair = _COPURCHASE.read(spark, sf_dir)
     item = (
         li.dropDuplicates(["ok", "pk"])
         .groupBy("pk")

@@ -29,6 +29,14 @@ from gerrydb_etl_spark.operators.similarity import (
 )
 from gerrydb_etl_spark.queries.base import query
 from gerrydb_etl_spark.sources import load_table
+from gerrydb_etl_spark.store.staging import (
+    IVF,
+    LSH_SIGS,
+    PQ,
+    corpus_count,
+    register,
+)
+from gerrydb_etl_spark.streaming.stream import EPOCH_DIR
 
 N_QUERIES = 10
 TOP_K = 5
@@ -130,6 +138,7 @@ def _recall_oracle(floor: float) -> str:
 
 
 _IVF_CELLS, _IVF_PROBE, _IVF_ITERS = 16, 4, 2
+_IVF16 = register("ivf_c16", IVF.at(n_cells=_IVF_CELLS, iters=_IVF_ITERS))
 
 # fold helpers over an already-double list column (the quantized
 # vectors read as doubles — operators/ivf.py scoring contract)
@@ -199,14 +208,13 @@ def ivf_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-hash oracle; the recall-vs-exact contract additionally
     lives in ivf_verify."""
     from gerrydb_etl_spark.operators.ivf import ivf_topk
-    from gerrydb_etl_spark.store.staging import staged_ivf
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
     return ivf_topk(
         emb, queries, k=TOP_K, n_cells=_IVF_CELLS, n_probe=_IVF_PROBE,
         iters=_IVF_ITERS,
-        model=staged_ivf(spark, sf_dir, _IVF_CELLS, _IVF_ITERS),
+        model=_IVF16.read(spark, sf_dir),
     )
 
 
@@ -278,12 +286,13 @@ def ivf_multiprobe_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         needs_cell_split,
         split_oversized_cells,
     )
-    from gerrydb_etl_spark.store.staging import corpus_count, staged_ivf
 
     emb = load_table(spark, sf_dir, "embeddings")
     n = corpus_count(spark, sf_dir, "embeddings")
     cells_dyn = cells_for_corpus(n, floor_k=_IVF_CELLS, per_cell=125)
-    assigned, cents = staged_ivf(spark, sf_dir, cells_dyn, _IVF_ITERS)
+    assigned, cents = IVF.read(
+        spark, sf_dir, n_cells=cells_dyn, iters=_IVF_ITERS
+    )
     sub_model = None
     if needs_cell_split(n, per_cell=125):
         # past cap * per_cell (= 64k vectors at this family's
@@ -318,7 +327,6 @@ def ivf_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     PERF.md r14, showed inline retraining dominating verify-lane
     floors)."""
     from gerrydb_etl_spark.operators.ivf import ivf_topk
-    from gerrydb_etl_spark.store.staging import staged_ivf
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
@@ -326,7 +334,7 @@ def ivf_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx = ivf_topk(
         emb, queries, k=TOP_K, n_cells=_IVF_CELLS, n_probe=_IVF_PROBE,
         iters=_IVF_ITERS,
-        model=staged_ivf(spark, sf_dir, _IVF_CELLS, _IVF_ITERS),
+        model=_IVF16.read(spark, sf_dir),
     )
     return _ann_recall_report(exact, approx, floor=0.8)
 
@@ -508,6 +516,9 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lsh_ann_topk(emb, queries, k=TOP_K, bits=4, tables=8, seed=42)
 
 
+_LSH_SIGS = register("lsh_sigs", LSH_SIGS.at(bits=4, tables=8))
+
+
 @query("embedding_neardup", oracle=_NEARDUP_REPLAY_SQL)
 def embedding_neardup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs (cosine >= 0.4) — the
@@ -522,12 +533,10 @@ def embedding_neardup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     float hazard is a signature sign bit whose plane dot sits within
     ~1 ulp of zero (BLAS matmul vs sequential fold) — probability ~0
     on real-valued embeddings."""
-    from gerrydb_etl_spark.store.staging import staged_lsh_sigs
-
     emb = load_table(spark, sf_dir, "embeddings")
     return embedding_neardup(
         emb, threshold=NEARDUP_COS, max_bucket_size=1000,
-        bucketed=staged_lsh_sigs(spark, sf_dir, bits=4, tables=8),
+        bucketed=_LSH_SIGS.read(spark, sf_dir),
     ).select("d1", "d2")
 
 
@@ -640,7 +649,6 @@ def embedding_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
         needs_cell_split,
         split_oversized_cells,
     )
-    from gerrydb_etl_spark.store.staging import corpus_count, staged_ivf
 
     emb = load_table(spark, sf_dir, "embeddings")
     # corpus-scaled cell count (operators/kmeans.py cells_for_corpus):
@@ -652,7 +660,9 @@ def embedding_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # second finding
     n = corpus_count(spark, sf_dir, "embeddings")
     cells = cells_for_corpus(n, floor_k=_IVF_CELLS, per_cell=125)
-    assigned, centroids = staged_ivf(spark, sf_dir, cells, _IVF_ITERS)
+    assigned, centroids = IVF.read(
+        spark, sf_dir, n_cells=cells, iters=_IVF_ITERS
+    )
     subcents = None
     if needs_cell_split(n, per_cell=125):
         # past cap * per_cell the cell count stops scaling — refine
@@ -676,6 +686,7 @@ def embedding_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _PQ_M, _PQ_CODES, _PQ_REFINE = 4, 16, 8
 _PQ_SUB = 16  # 64-dim embeddings / 4 subspaces
+_PQ = register("pq", PQ.at(m_subs=_PQ_M, n_codes=_PQ_CODES, iters=_IVF_ITERS))
 
 # Guard-band ceiling for _forced_pq_params, mirroring clustering.py's
 # _GUARD_MAX_N: any driver/bench corpus sits FAR below operators/
@@ -905,11 +916,6 @@ def pq_adc_topk_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB — a full value-hash oracle over a three-layer
     approximate index. Recall contract lives in pq_verify."""
     from gerrydb_etl_spark.operators.pq import pq_adc_topk
-    from gerrydb_etl_spark.store.staging import (
-        corpus_count,
-        staged_ivf,
-        staged_pq,
-    )
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
@@ -919,12 +925,14 @@ def pq_adc_topk_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     m_subs, n_codes, refine = _forced_pq_params(
         corpus_count(spark, sf_dir, "embeddings")
     )
-    books, codes = staged_pq(spark, sf_dir, m_subs, n_codes, _IVF_ITERS)
+    books, codes = PQ.read(
+        spark, sf_dir, m_subs=m_subs, n_codes=n_codes, iters=_IVF_ITERS
+    )
     return pq_adc_topk(
         emb, queries, k=TOP_K, n_cells=_IVF_CELLS, n_probe=_IVF_PROBE,
         iters=_IVF_ITERS, m_subs=m_subs, n_codes=n_codes,
         refine=refine,
-        model=staged_ivf(spark, sf_dir, _IVF_CELLS, _IVF_ITERS),
+        model=_IVF16.read(spark, sf_dir),
         books=books, codes=codes,
     )
 
@@ -947,11 +955,6 @@ def pq_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     0.9s, ADC+rescore on staged models 4.3s) — not the
     'O(corpus x queries) truth-set cost' previously assumed."""
     from gerrydb_etl_spark.operators.pq import pq_adc_topk
-    from gerrydb_etl_spark.store.staging import (
-        corpus_count,
-        staged_ivf,
-        staged_pq,
-    )
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
@@ -961,12 +964,14 @@ def pq_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     m_subs, n_codes, refine = _forced_pq_params(
         corpus_count(spark, sf_dir, "embeddings")
     )
-    books, codes = staged_pq(spark, sf_dir, m_subs, n_codes, _IVF_ITERS)
+    books, codes = PQ.read(
+        spark, sf_dir, m_subs=m_subs, n_codes=n_codes, iters=_IVF_ITERS
+    )
     approx = pq_adc_topk(
         emb, queries, k=TOP_K, n_cells=_IVF_CELLS, n_probe=_IVF_PROBE,
         iters=_IVF_ITERS, m_subs=m_subs, n_codes=n_codes,
         refine=refine,
-        model=staged_ivf(spark, sf_dir, _IVF_CELLS, _IVF_ITERS),
+        model=_IVF16.read(spark, sf_dir),
         books=books, codes=codes,
     )
     return _ann_recall_report(exact, approx, floor=0.6)
@@ -980,6 +985,12 @@ def _stream_index_oracle() -> str:
     SELECT vec_id, cluster_id AS cell
     FROM a{_IVF_ITERS} WHERE rn = 1
     """
+
+
+# the ingest head's epoch input: embeddings in 2 ascending vec_id epochs
+_EMB_EPOCHS = register("emb_epochs", EPOCH_DIR.at(
+    table="embeddings", key_col="vec_id", prefix="emb", n_batches=2, files_per_batch=1,
+))
 
 
 @query("embeddings_stream_index_ingest", oracle=_stream_index_oracle())
@@ -1007,10 +1018,7 @@ def embeddings_stream_index_ingest(
     import shutil
     import tempfile
 
-    from gerrydb_etl_spark.streaming.stream import (
-        ensure_staged_epoch_dir,
-        run_stream_vector_index,
-    )
+    from gerrydb_etl_spark.streaming.stream import run_stream_vector_index
 
     work = tempfile.mkdtemp(prefix="emb_index_ingest_")
     try:
@@ -1020,10 +1028,7 @@ def embeddings_stream_index_ingest(
             # session-staged epoch input (r18): the per-call staging
             # writes were ~0.45s of harness cost inside the timed
             # query (.scale/opt_r18_epochstage_share.json)
-            stage_dir=ensure_staged_epoch_dir(
-                spark, sf_dir, "embeddings", "vec_id", "emb", 2,
-                files_per_batch=1,
-            ),
+            stage_dir=_EMB_EPOCHS.ensure(spark, sf_dir),
         ).select("vec_id", F.col("cell").cast("int").alias("cell"))
         return out.localCheckpoint(eager=True)
     finally:
@@ -1077,9 +1082,8 @@ def ivf_index_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combined k-group aggregation; windows run over
     k = {_IVF_CELLS} rows."""
     from gerrydb_etl_spark.operators.kmeans import assign
-    from gerrydb_etl_spark.store.staging import staged_ivf
 
-    assigned, centroids = staged_ivf(spark, sf_dir, _IVF_CELLS, _IVF_ITERS)
+    assigned, centroids = _IVF16.read(spark, sf_dir)
     # re-derive the distance narrowly (the staged assignment keeps
     # only (vec_id, cluster_id, qv)); assign() recomputes the same
     # argmin + distance from the same literal centroids
@@ -1321,7 +1325,6 @@ def semantic_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
         needs_cell_split,
         split_oversized_cells,
     )
-    from gerrydb_etl_spark.store.staging import corpus_count, staged_ivf
 
     emb = load_table(spark, sf_dir, "embeddings")
     # corpus-scaled cells + the past-the-cap hierarchy, same contract
@@ -1329,7 +1332,9 @@ def semantic_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     # at every driver-verified scale
     n = corpus_count(spark, sf_dir, "embeddings")
     cells = cells_for_corpus(n, floor_k=_IVF_CELLS, per_cell=125)
-    assigned, centroids = staged_ivf(spark, sf_dir, cells, _IVF_ITERS)
+    assigned, centroids = IVF.read(
+        spark, sf_dir, n_cells=cells, iters=_IVF_ITERS
+    )
     subcents = None
     if needs_cell_split(n, per_cell=125):
         assigned, subcents = split_oversized_cells(assigned, per_cell=125)

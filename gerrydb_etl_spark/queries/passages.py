@@ -17,12 +17,14 @@ from gerrydb_etl_spark.operators.passages import (
 )
 from gerrydb_etl_spark.queries.base import query
 from gerrydb_etl_spark.sources import load_table
-from gerrydb_etl_spark.store.staging import staged_shingles, staged_token_codes
+from gerrydb_etl_spark.store.staging import SHINGLES, TOKEN_CODES, WINNOW, register
 
 BLOCK_TOKENS = 10
 MIN_DOCS = 2
 WINNOW_K = 3
 WINNOW_W = 4
+_TOKEN_CODES = register("token_codes", TOKEN_CODES.at())
+_WINNOW_FPS = register(f"winnow_k{WINNOW_K}", WINNOW.at(k=WINNOW_K, w=WINNOW_W))
 
 # Shared oracle fragment: per-token integer code, identical to
 # operators/passages.py _token_codes (len*256 + ascii of first char).
@@ -116,11 +118,8 @@ def winnow_fingerprints_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents — so the index is write-once corpus state like the
     staged dHash/SimHash fingerprints; values identical to the inline
     array-domain selection by construction
-    (store/staging.py ensure_staged_winnow), the full-replay oracle
-    unchanged."""
-    from gerrydb_etl_spark.store.staging import staged_winnow
-
-    return staged_winnow(spark, sf_dir, k=WINNOW_K, w=WINNOW_W)
+    (store/staging.py WINNOW), the full-replay oracle unchanged."""
+    return _WINNOW_FPS.read(spark, sf_dir)
 
 
 CONTAINMENT_TAU = 0.9
@@ -171,7 +170,7 @@ def containment_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return containment_pairs(
         docs, "doc_id", "text", n=3, threshold=CONTAINMENT_TAU,
-        max_shingle_df=1000, shingles=staged_shingles(spark, sf_dir, 3),
+        max_shingle_df=1000, shingles=SHINGLES.read(spark, sf_dir, n=3),
     )
 
 
@@ -182,6 +181,9 @@ def containment_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 # a usable candidate density. The tighter posting cap bounds the
 # bucket-squared pair volume of any still-hot fingerprint.
 WINNOW_ND_K = 5
+_WINNOW_ND_FPS = register(f"winnow_k{WINNOW_ND_K}", WINNOW.at(
+    k=WINNOW_ND_K, w=WINNOW_W,
+))
 WINNOW_MIN_SHARED = 2
 WINNOW_FP_CAP = 200
 
@@ -242,10 +244,9 @@ def winnow_near_dup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     write-once corpus state, values identical to inline by
     construction, oracle replays the full selection from raw)."""
     from gerrydb_etl_spark.operators.dedup import _drop_hot_keys, bucket_pairs
-    from gerrydb_etl_spark.store.staging import staged_winnow
 
     sel = (
-        staged_winnow(spark, sf_dir, k=WINNOW_ND_K, w=WINNOW_W)
+        _WINNOW_ND_FPS.read(spark, sf_dir)
         .select(F.col("doc_id").alias("doc"), F.col("fingerprint").alias("fp"))
         .distinct()
     )
@@ -331,5 +332,5 @@ def substring_dedup_spans_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     gaps-and-islands window. Reads the session-staged token codes."""
     docs = load_table(spark, sf_dir, "documents")
     return duplicate_substring_spans(
-        docs, min_len=SUBSTR_L, codes=staged_token_codes(spark, sf_dir)
+        docs, min_len=SUBSTR_L, codes=_TOKEN_CODES.read(spark, sf_dir)
     )

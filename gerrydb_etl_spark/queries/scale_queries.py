@@ -15,10 +15,10 @@ from gerrydb_etl_spark.functions.numeric import dec, dsum
 from gerrydb_etl_spark.operators.skew import salted_collect_list
 from gerrydb_etl_spark.queries.base import query
 from gerrydb_etl_spark.sources.registry import load_table
-from gerrydb_etl_spark.store.bucketing import (
-    ensure_bucketed_facts,
-    read_bucketed,
-)
+from gerrydb_etl_spark.store.bucketing import BUCKETED_FACTS, read_bucketed
+from gerrydb_etl_spark.store.staging import register
+
+_BUCKETED = register("bucketed_facts", BUCKETED_FACTS.at())
 
 
 @query(
@@ -44,12 +44,12 @@ def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: bucketing pays one shuffle at write time, amortized over
     every subsequent join on that key — the canonical answer to the
     biggest cost of fact-fact joins. Staging is session-scoped
-    (ensure_bucketed_facts: first use writes, later uses are a
+    (a registered fixture: first use writes, later uses are a
     catalog lookup; bench.py stages it with the other session warmup
     costs), so what this query measures is the JOIN, not the write —
     a real deployment writes once and joins many times.
     """
-    o_name, li_name = ensure_bucketed_facts(spark, sf_dir)
+    o_name, li_name = _BUCKETED.ensure(spark, sf_dir)
     li = read_bucketed(spark, li_name)
     o = read_bucketed(spark, o_name)
     return (

@@ -16,6 +16,8 @@ from gerrydb_etl_spark.queries.base import query
 from gerrydb_etl_spark.sources import load_table
 from gerrydb_etl_spark.store.eav import melt_to_eav, pivot_from_eav
 from gerrydb_etl_spark.store.scd2 import current_view, empty_versioned, scd2_merge
+from gerrydb_etl_spark.store.staging import register
+from gerrydb_etl_spark.streaming.stream import EPOCH_DIR, _files_per_epoch
 
 EAV_COLS = {
     "p_name": "str",
@@ -702,6 +704,14 @@ def _checksum_base_oracle() -> str:
     """
 
 
+# orders in 2 ascending o_orderkey epochs, files-per-epoch the
+# size-derived value the checksum runner uses
+_ORDERS_EPOCHS = register("orders_epochs", EPOCH_DIR.at(
+    table="orders", key_col="o_orderkey", prefix="orders", n_batches=2,
+    files_per_batch=lambda spark, sf_dir: _files_per_epoch(spark, sf_dir, "orders", 2),
+))
+
+
 @query("orders_stream_checksum", oracle=_checksum_base_oracle())
 def orders_stream_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming maintenance of the anti-entropy bucket checksums
@@ -728,22 +738,14 @@ def orders_stream_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
             batch_df, order_cents(F.col("o_totalprice")), "n", "x"
         )
 
-    from gerrydb_etl_spark.streaming.stream import (
-        _files_per_epoch,
-        ensure_staged_epoch_dir,
-        run_stream_checksum,
-    )
+    from gerrydb_etl_spark.streaming.stream import run_stream_checksum
 
     root = tempfile.mkdtemp(prefix="orders_checksum_stream_")
     try:
         # session-staged epoch input (r18): the per-call staging
         # writes were ~0.7s of harness cost inside the timed query
-        # (.scale/opt_r18_epochstage_share.json); files-per-epoch
-        # stays the size-derived value the runner uses
-        stage = ensure_staged_epoch_dir(
-            spark, sf_dir, "orders", "o_orderkey", "orders", 2,
-            files_per_batch=_files_per_epoch(spark, sf_dir, "orders", 2),
-        )
+        # (.scale/opt_r18_epochstage_share.json)
+        stage = _ORDERS_EPOCHS.ensure(spark, sf_dir)
         out = run_stream_checksum(
             spark, sf_dir, root, digest, n_batches=2, stage_dir=stage
         )

@@ -14,12 +14,10 @@ amortized over every subsequent join.
 
 from __future__ import annotations
 
-import hashlib
-import os
-import shutil
-from urllib.parse import urlparse
-
 from pyspark.sql import DataFrame, SparkSession
+
+from gerrydb_etl_spark.sources.registry import load_table
+from gerrydb_etl_spark.store.staging import Fixture
 
 
 def write_bucketed(
@@ -44,93 +42,19 @@ def read_bucketed(spark: SparkSession, table_name: str) -> DataFrame:
     return spark.table(table_name)
 
 
-def _source_fingerprint(
-    sf_dir: str, tables: tuple[str, ...] = ("orders", "lineitem")
-) -> str:
-    """Short content fingerprint of the staged tables' source files:
-    absolute path + every parquet part's (path, mtime_ns, size). If
-    the sf_dir data is regenerated in place mid-session the
-    fingerprint — and so the managed-table tag — changes, forcing a
-    restage instead of silently reusing the stale staged copy."""
-    h = hashlib.sha256(os.path.abspath(sf_dir).encode())
-    for table in tables:
-        p = os.path.join(sf_dir, f"{table}.parquet")
-        parts = (
-            sorted(
-                os.path.join(p, f)
-                for f in os.listdir(p)
-                if not f.startswith((".", "_"))
-            )
-            if os.path.isdir(p)
-            else [p]
-        )
-        for fp in parts:
-            if os.path.exists(fp):
-                st = os.stat(fp)
-                h.update(f"{fp}:{st.st_mtime_ns}:{st.st_size}".encode())
-    return h.hexdigest()[:8]
-
-
-def bucketed_fact_names(sf_dir: str) -> tuple[str, str]:
-    """Session-stable managed-table names for the staged bucketed
-    copies of (orders, lineitem) at a given scale-factor directory.
-    The name carries a short source fingerprint (path + file mtimes/
-    sizes) so two sf_dirs never collide in one warehouse AND
-    regenerated data at the same path never hits a stale staged
-    copy."""
-    # one fingerprint walk serves both names: stat-ing every part
-    # file twice doubled the staging-probe I/O and a mid-call mtime
-    # change could have tagged the pair inconsistently
-    tag = _source_fingerprint(sf_dir)
-    return (f"bq_orders_{tag}", f"bq_lineitem_{tag}")
-
-
-def ensure_bucketed_facts(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Stage orders/lineitem as bucketed managed tables ONCE per
-    session+sf_dir; subsequent calls are a catalog lookup.
-
-    Bucketing's whole economics is write-once-join-many: the one
-    key-shuffle is paid at staging time and every later join on the
-    key is exchange-free. Staging therefore lives OUTSIDE any benched
-    query body (bench.py warms it with the other session one-time
-    costs; VERDICT r4 item 3 flagged the in-query rewrite as
-    measurement conflation).
-
-    The in-memory catalog forgets managed tables between sessions but
-    their warehouse directories survive; a catalog hit means THIS
-    session staged them from sources with the same fingerprint
-    (path + mtimes/sizes — regenerated data mints a new table tag),
-    a miss means leftover dirs must be cleared before the idempotent
-    rewrite. Superseded fingerprints' directories linger until the
-    same tag is restaged; the warehouse is session-scoped scratch, so
-    that is bounded by regenerations within one session.
-    """
-    from gerrydb_etl_spark.sources.registry import load_table
-
-    o_name, li_name = bucketed_fact_names(sf_dir)
-    if spark.catalog.tableExists(o_name) and spark.catalog.tableExists(
-        li_name
-    ):
-        return o_name, li_name
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    for t in (o_name, li_name):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(os.path.join(wh, t), ignore_errors=True)
-    write_bucketed(
-        load_table(spark, sf_dir, "orders"),
-        o_name,
-        ["o_orderkey"],
-        16,
-        sort_cols=["o_orderkey"],
-    )
-    write_bucketed(
-        load_table(spark, sf_dir, "lineitem"),
-        li_name,
-        ["l_orderkey"],
-        16,
-        sort_cols=["l_orderkey"],
-    )
-    return o_name, li_name
+# orders/lineitem bucketed on their join key: bucketing's whole
+# economics is write-once-join-many, so the one key-shuffle is paid at
+# staging time (outside any benched query body) and every later join
+# on the key is exchange-free. A plain re-layout of two source tables:
+# no derivation code, so the name carries only the source fingerprint.
+BUCKETED_FACTS = Fixture(
+    "bq_{frame}_{fp}", ("orders", "lineitem"), (),
+    lambda spark, sf_dir: tuple(
+        load_table(spark, sf_dir, t).write.bucketBy(16, key).sortBy(key)
+        for t, key in (("orders", "o_orderkey"), ("lineitem", "l_orderkey"))
+    ),
+    frames=("orders", "lineitem"),
+)
 
 
 def count_exchanges(df: DataFrame) -> int:

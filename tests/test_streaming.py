@@ -437,7 +437,7 @@ def test_stream_vector_index_restart_is_idempotent(spark, tmp_path):
     import os
 
     from gerrydb_etl_spark.operators.kmeans import assign, quantize
-    from gerrydb_etl_spark.store.staging import staged_ivf
+    from gerrydb_etl_spark.store.staging import IVF
     from gerrydb_etl_spark.streaming.stream import run_stream_vector_index
     from tests.conftest import SF_SMOKE
 
@@ -463,7 +463,7 @@ def test_stream_vector_index_restart_is_idempotent(spark, tmp_path):
     assert len(ids) == len(set(ids))
 
     # streamed index == batch-built index (same staged quantizer)
-    assigned, centroids = staged_ivf(spark, SF_SMOKE, 16, 2)
+    assigned, centroids = IVF.read(spark, SF_SMOKE, n_cells=16, iters=2)
     from gerrydb_etl_spark.sources.registry import load_table
 
     batch = {
@@ -642,37 +642,48 @@ def test_memory_sink_cardinality_guard(spark):
     assert ok.count() == 100
 
 
-def test_staged_epoch_dir_is_session_scoped(spark):
-    """The staged epoch directory is reused WITHIN a session (memo
-    hit: same path, files untouched) but never ACROSS processes: a
-    leftover directory from a previous JVM — simulated by clearing
-    the per-process memo — is dropped and restaged from the parquet
-    inputs, so no bench/driver run ever reads a prior run's staging
-    work. File set and epoch mtime ORDERING are identical either way
-    (the layout is a pure function of the source; mtimes are
-    wall-clock-anchored, so only their order is contractual)."""
+def test_staged_epoch_dir_is_session_scoped(spark, tmp_path, monkeypatch):
+    """The staged epoch directory lives under THIS session's fixture
+    root (store/staging.py session_root) and is reused within the
+    session (same path, same inodes: no rewrite), but never across
+    sessions: a fresh session — simulated by pointing session_root at
+    another root — restages from the parquet inputs into its own root
+    and leaves the first session's files alone. File set and epoch
+    mtime ORDERING are identical either way (the layout is a pure
+    function of the source; mtimes are wall-clock-anchored, so only
+    their order is contractual)."""
     import os
 
-    from gerrydb_etl_spark.streaming import stream as stream_mod
+    from gerrydb_etl_spark.store import staging
+    from gerrydb_etl_spark.streaming.stream import EPOCH_DIR
 
-    args = (spark, SF_SMOKE, "orders", "o_orderkey", "orders_scopetest", 2)
-    d1 = stream_mod.ensure_staged_epoch_dir(*args, files_per_batch=1)
+    epochs = EPOCH_DIR.at(
+        table="orders", key_col="o_orderkey", prefix="orders_scopetest",
+        n_batches=2, files_per_batch=1,
+    )
+
+    def inodes(d):
+        return {f: os.stat(os.path.join(d, f)).st_ino for f in os.listdir(d)}
+
+    d1 = epochs.ensure(spark, SF_SMOKE)
+    assert os.path.dirname(d1) == staging.session_root(spark)
     listing1 = sorted(os.listdir(d1))
-    inode1 = {f: os.stat(os.path.join(d1, f)).st_ino for f in listing1}
+    inode1 = inodes(d1)
 
-    # same session: memo hit — same directory, same inodes (no rewrite)
-    d2 = stream_mod.ensure_staged_epoch_dir(*args, files_per_batch=1)
-    assert d2 == d1
-    assert {f: os.stat(os.path.join(d2, f)).st_ino for f in listing1} == inode1
+    # same session: same directory, same inodes (no rewrite)
+    assert epochs.ensure(spark, SF_SMOKE) == d1
+    assert inodes(d1) == inode1
 
-    # fresh process (memo cleared): leftover dir is dropped and restaged
-    stream_mod._EPOCH_DIRS_THIS_PROCESS.discard(d1)
-    d3 = stream_mod.ensure_staged_epoch_dir(*args, files_per_batch=1)
-    assert d3 == d1
+    # another session: its own root, restaged, the first left alone
+    other = tmp_path / "other-session"
+    other.mkdir()
+    monkeypatch.setattr(staging, "session_root", lambda spark: str(other))
+    d3 = epochs.ensure(spark, SF_SMOKE)
+    assert d3 == str(other / os.path.basename(d1))
     listing3 = sorted(os.listdir(d3))
     assert listing3 == listing1
-    inode3 = {f: os.stat(os.path.join(d3, f)).st_ino for f in listing3}
-    assert inode3 != inode1  # actually rebuilt, not reused
+    assert set(inodes(d3).values()).isdisjoint(inode1.values())
+    assert inodes(d1) == inode1
     # deterministic mtime ordering (epoch delivery order) reproduced:
     # sorting by (mtime, path) yields the epoch-ascending file order
     by_mtime = sorted(
